@@ -21,10 +21,10 @@ object Tables {
     // physical encodings across rounds, and downstream operators expect a
     // plain TimestampType either way:
     //  * TIMESTAMP(NANOS) parquet → Spark reads raw nanos longs (the
-    //    nanosAsLong conf, set by every graft session builder);
+    //    nanosAsLong conf, which GraftSession sets);
     //  * timestamp[us] with isAdjustedToUTC=false → Spark 4 infers
     //    TIMESTAMP_NTZ, which unix_micros/watermarks reject.
-    // Every graft session pins spark.sql.session.timeZone=UTC, so the
+    // GraftSession pins spark.sql.session.timeZone=UTC, so the
     // NTZ→TZ cast is value-preserving.
     df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.name == "ts" && f.dataType == LongType)
@@ -41,25 +41,4 @@ object Tables {
   /** Register every table as a temp view (for spark.sql / PigScript use). */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     names.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
-}
-
-/** Session factory with scale-appropriate defaults (AQE on, shuffle
-  * partitions sized to cores — not the 200 default that would fragment
-  * local runs and under-provision a 1000-executor cluster, where the
-  * conf is expected to be overridden per deployment).
-  */
-object GraftSession {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

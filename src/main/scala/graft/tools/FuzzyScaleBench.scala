@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness for the edit-distance similarity join
@@ -30,15 +29,7 @@ object FuzzyScaleBench {
     val ledger = args.lift(1).getOrElse("bench/bench_r08_fuzzy_scale.json")
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_BASE",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     val cust = spark.read.parquet(s"$base/customer.parquet")
       .select(col("c_name")).cache()

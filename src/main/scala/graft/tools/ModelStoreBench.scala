@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Quantifies the [[graft.core.ModelStore]] train-once-reuse win: for
@@ -26,15 +25,7 @@ object ModelStoreBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val ledger = args.lift(1).getOrElse("bench/bench_r07_modelstore.json")
     val storeDir = "target/model_store_msbench"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(storeDir))
 

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Writes the FULL `.explain("formatted")` text of named queries to
@@ -9,20 +8,7 @@ import graft.SparkEntry
   * benchOnly variants are resolvable too. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // same engine posture as Bench/Verify so dumped plans match what
-      // the bench executes
-      .config(graft.streaming.NioCheckpointFileManager.ConfKey,
-        graft.streaming.NioCheckpointFileManager.ConfValue)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val tag = sys.env.getOrElse("PLAN_TAG", "r09")
     val suffix = sys.env.getOrElse("PLAN_SUFFIX", "before")

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** One-off diagnosis harness for streaming rows: runs a named SparkEntry
@@ -8,21 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * state-store commit vs exec). */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.streaming.NioCheckpointFileManager.ConfKey,
-        graft.streaming.NioCheckpointFileManager.ConfValue)
-      // let AQE re-plan INSIDE cached plans: persisted intermediates
-      // otherwise pin tiny tables at the full shuffle-partition count,
-      // and every later pass re-schedules those near-empty tasks
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit =

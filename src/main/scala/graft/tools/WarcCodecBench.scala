@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** WARC codec envelope A/B — the round-8 100× crawl run was codec-bound
@@ -20,15 +19,7 @@ object WarcCodecBench {
     val runs = args.lift(1).map(_.toInt).getOrElse(3)
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_BASE",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     val docs = spark.read.parquet(s"$base/documents.parquet")
       .select(concat(lit("https://example.org/doc/"), col("doc_id"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Point-read vs segment-scan evidence for the WARC offset index
@@ -19,15 +18,7 @@ object WarcSeekBench {
     val out = args.lift(1).getOrElse("target/warc_seek_bench")
     val stride = args.lift(2).map(_.toInt).getOrElse(500)
     val ledger = args.lift(3).getOrElse("bench/bench_r08_warc_seek.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     import graft.sources.Warc
 
     val docs = spark.read.parquet(docs0)
@@ -39,7 +30,8 @@ object WarcSeekBench {
     }
     // segments sized by repartition so scan parallelism is honest
     val (_, tWrite) = timed {
-      Warc.writeIndexed(docs.repartition(cpus.toInt), out,
+      Warc.writeIndexed(
+        docs.repartition(spark.sparkContext.defaultParallelism), out,
         uri = concat(lit("urn:graft:doc:"), col("doc_id")),
         payload = col("text"))
     }
